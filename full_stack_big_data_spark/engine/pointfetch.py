@@ -120,30 +120,6 @@ def point_fetch(spark: SparkSession, path: str, key: str,
             .drop("pk"))
 
 
-def fetch_payload_prefetched(spark: SparkSession, path: str, key: str,
-                             ids_df: DataFrame, ids: list[int] | None,
-                             pk_mod: int = PF_PK_MOD) -> DataFrame:
-    """:func:`fetch_payload`'s three regimes with the driver id collect
-    ALREADY PERFORMED by the caller (``ids = fetch_ids(ids_df, key)``,
-    possibly None past the size gate). Exists so the streaming gate
-    bodies can run that collect on an overlap thread (guide §2.6)
-    while the driver concurrently builds the next verify tier's
-    expression trees — the id fetch is the per-batch driver-blocking
-    action, and the expression construction is the driver-side work
-    that used to serialize behind it. Kept separate from
-    ``fetch_payload`` (same dispatch, deliberately duplicated ~6
-    lines) so batch-path consumers of the classic entry point keep an
-    unchanged function."""
-    if ids is not None and len(ids) <= PF_IN_MAX:
-        return point_fetch(spark, path, key, ids, pk_mod=pk_mod)
-    r = spark.read.parquet(path)
-    if ids is not None:
-        pks = sorted({i % pk_mod for i in ids})
-        r = r.where(F.col("pk").isin(pks))
-    return (r.drop("pk")
-            .join(F.broadcast(ids_df.select(key).distinct()), key))
-
-
 def fetch_payload(spark: SparkSession, path: str, key: str,
                   ids_df: DataFrame, pk_mod: int = PF_PK_MOD) -> DataFrame:
     """The gates' entry point: three regimes by candidate-set size,

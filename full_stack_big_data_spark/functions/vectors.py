@@ -1,17 +1,40 @@
 """Vector math over ``array<float>`` embedding columns.
 
-Two implementations of the same arithmetic:
+Two kernels compute the same cosine, bit-identical to each other
+(pinned in tests/test_similarity.py):
 
 * ``dot`` / ``l2_norm`` / ``cosine_sim_exprs`` — pure Catalyst
-  higher-order functions (``zip_with`` + ``aggregate``). Zero Python
-  transfer, but HOFs are CodegenFallback: every row interprets three
-  lambda chains and allocates the intermediate arrays, ~µs/row.
-* ``cosine_sim`` — Arrow-batched pandas UDF that replays the SAME
-  IEEE-754 operation sequence with numpy (see its docstring for the
-  bit-exactness argument). This is the default: the similarity
-  operators score millions of candidate pairs per run, and the r14
-  decomposition measured the HOF chain at ~7.6 s of the 10.8 s
-  ``emb_knn_graph`` wall at sf0.1 (2.56 M pairs), vs ~1 s Arrow.
+  higher-order functions (``zip_with`` + ``aggregate``). No Python
+  worker and no call-site constraint, but HOFs are CodegenFallback:
+  every row interprets three lambda chains, ~µs/row.
+* ``cosine_sim`` — a zero-copy ``arrow_udf`` that replays the SAME
+  IEEE-754 operation sequence with numpy over the Arrow values buffer.
+  It pays a Python-worker round trip per batch, which only a large
+  candidate volume amortizes.
+
+Routing: one paired order-alternating A/B per call-site family
+(pandas / HOF / Arrow variants in one process, sf0.1, 4 cores, 6 reps,
+md5-equal across variants; variant minima in seconds; ties go to the
+HOF form, which needs no Python worker and has no call-site
+constraint):
+
+=======================  =================================  =====  =====  ======
+family                   entry measured                     HOF    Arrow  routed
+=======================  =================================  =====  =====  ======
+query-batch top-k        ann_ivf_scaled                     1.137  1.174  HOF
+corpus self-cosine       q_embedding_stats                  0.374  0.581  HOF
+candidate-pair verify    embedding_neardup_banded_scaled    2.452  1.181  Arrow
+streaming-gate tier 2    stream_embedding_admit_scaled      2.133  2.429  HOF
+brute-force top-k        ann_brute_topk (12.5k pairs)       0.537  0.749  HOF
+corpus-scale scorers     emb_knn_graph (2.56 M pairs)       ·      wins   Arrow
+=======================  =================================  =====  =====  ======
+
+Query-batch top-k covers ``ann_srp_lsh``, ``ann_ivf``,
+``ann_ivf_scaled`` and ``ivf_index_serve``; candidate-pair verify
+covers ``banded_neardup_pairs`` and both SemDeDup pair sets; the
+corpus-scale scorers are the kNN graph and the incremental/persisted
+SRP ANN. The last two rows come from earlier A/Bs; the kNN one beat a
+pandas UDF form by 1.23× on the minima.
 
 Floats are widened to double *before* any arithmetic so accumulation
 order and precision match the DuckDB oracle (which computes list_* in
@@ -21,7 +44,6 @@ double).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, functions as F
 
@@ -42,8 +64,12 @@ def l2_norm(a: Column) -> Column:
 
 
 def cosine_sim_exprs(a: Column, b: Column) -> Column:
-    """The Catalyst-expression form of :func:`cosine_sim` (kept for
-    reference and for the paired A/B adjudication; same semantics)."""
+    """Cosine similarity as Catalyst expressions; NULL (not an ANSI
+    divide-by-zero crash) when either vector has zero norm — a zero
+    vector has no direction, and a NULL similarity drops out of every
+    top-k/threshold filter, which is the only sensible semantics for
+    degenerate embeddings. NULL inputs, NULL elements and ragged pairs
+    (``zip_with`` pads with NULL) are NULL too."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom)
 
@@ -66,99 +92,17 @@ def _cos_row(x, y) -> float:
     return d / denom if denom > 0 else float("nan")
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL (not an ANSI divide-by-zero crash) when
-    either vector has zero norm — a zero vector has no direction, and a
-    NULL similarity drops out of every top-k/threshold filter, which is
-    the only sensible semantics for degenerate embeddings.
-
-    Arrow-batched numpy implementation, bit-identical to the Catalyst
-    HOF form by construction: the dim loop applies the SAME IEEE-754
-    double operation sequence the ``aggregate`` fold does — per step
-    one rounded multiply then one rounded add, left to right —
-    vectorized ACROSS rows instead of along the vector, so no pairwise
-    / BLAS re-association sneaks in. float32 → float64 widening is
-    exact; ``Math.sqrt`` and ``np.sqrt`` are both correctly rounded per
-    IEEE; denom and the final divide each round once in both forms.
-    NULL propagation matches too: a NULL input row, a NULL element
-    (→ NaN dot via the oracle's own semantics) or a zero/NaN denom all
-    fail ``denom > 0`` in Catalyst and are masked to NA here (pandas
-    converts NaN to NA for the nullable Float64 return, which Spark
-    reads as NULL).
-
-    PRECONDITION — finite inputs (r14 ADVICE): the bit-identity claim
-    above covers finite embeddings (every corpus/fixture vector). For
-    NON-finite inputs the two forms diverge on one corner: ±inf
-    elements give denom = inf > 0 with a NaN ratio, which the HOF form
-    returns as NaN (sorted ABOVE all doubles by a descending top-k)
-    while this form's Float64 masking turns it into NULL (dropped by
-    threshold filters). Callers feeding unsanitized external vectors
-    must filter non-finite rows first; the engine's similarity
-    operators all consume the generated corpus tables, which are
-    finite by construction.
-
-    CALL-SITE CONSTRAINT: returned as a nondeterministic expression
-    (see below), so it is valid in Project/Filter positions only —
-    Spark's analyzer rejects nondeterministic expressions inside join
-    conditions, aggregate-function arguments and generator inputs, and
-    it blocks pushdown of unrelated filters below the projection.
-    Compute the column first (``withColumn``) if a future caller needs
-    it near one of those positions.
-    """
-
-    @F.pandas_udf("double")
-    def _cos(av: pd.Series, bv: pd.Series) -> pd.Series:
-        out = np.full(len(av), np.nan)
-        valid = (~av.isna() & ~bv.isna()).to_numpy()
-        if valid.any():
-            va = av[valid].to_numpy()
-            vb = bv[valid].to_numpy()
-            try:
-                A = np.stack(va).astype(np.float64)
-                B = np.stack(vb).astype(np.float64)
-            except ValueError:
-                # Ragged batch (never the fixture's fixed-dim
-                # embeddings): zip_with pads with NULL → NULL dot →
-                # when(denom>0, NULL) → NULL; replay row-at-a-time.
-                out[valid] = [_cos_row(x, y) for x, y in zip(va, vb)]
-                return pd.Series(out).astype("Float64")
-            if A.shape[1] != B.shape[1]:
-                out[valid] = [_cos_row(x, y) for x, y in zip(va, vb)]
-                return pd.Series(out).astype("Float64")
-            d = np.zeros(len(A))
-            sa = np.zeros(len(A))
-            sb = np.zeros(len(A))
-            for i in range(A.shape[1]):
-                ai = A[:, i]
-                bi = B[:, i]
-                d = d + ai * bi
-                sa = sa + ai * ai
-                sb = sb + bi * bi
-            denom = np.sqrt(sa) * np.sqrt(sb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = np.where(denom > 0, d / denom, np.nan)
-            out[valid] = c
-        # Float64 (masked) turns NaN into NA → SQL NULL, matching
-        # when(denom > 0, ...)'s else-NULL branch.
-        return pd.Series(out).astype("Float64")
-
-    # asNondeterministic: the threshold consumers filter on the cosine
-    # column (`where(cos >= t)` above the projection), and pushed-down
-    # filters referencing a UDF-computed column duplicate the
-    # ArrowEvalPython below themselves — every candidate pair scored
-    # twice (guide §4.4; the r14 duplicated-UDF audit caught `_cos` ×2
-    # in both banded deployment entries). The function is genuinely
-    # deterministic, so blocking reorder/duplication changes no result.
-    return _cos.asNondeterministic()(a, b)
-
-
 def _list_matrix(arr: pa.Array) -> np.ndarray | None:
     """(n, d) float64 matrix over a fixed-dim ``ListArray<float>``'s
     VALUES BUFFER — the guide §4.2 re-slice trick: an Arrow list column
     is one contiguous values buffer plus offsets, so a fixed-dim batch
     reshapes into a matrix without touching a single row object. None
     → caller takes the row-wise fallback (ragged lengths, null rows or
-    null elements — never the fixture corpora)."""
+    null elements — never the fixture corpora).
+
+    ``arr.values`` is the WHOLE child buffer, ignoring a slice's
+    offset, so the null check runs on the sliced range only: a null
+    outside the slice must not demote the batch to the row loop."""
     if arr.null_count:
         return None
     try:
@@ -168,43 +112,54 @@ def _list_matrix(arr: pa.Array) -> np.ndarray | None:
     lens = np.diff(offs)
     if len(lens) == 0 or lens.min() != lens.max():
         return None
-    vals = arr.values
+    vals = arr.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
     if vals.null_count:
         return None
-    v = vals.to_numpy(zero_copy_only=True)
-    return (v[offs[0]:offs[-1]]
+    return (vals.to_numpy(zero_copy_only=True)
             .reshape(len(lens), int(lens[0])).astype(np.float64))
 
 
-def cosine_sim_zerocopy(a: Column, b: Column) -> Column:
-    """:func:`cosine_sim` behind the Arrow-native UDF interface
-    (``arrow_udf``, Spark 4.1) — bit-identical semantics, cheaper
-    boundary. The pandas form receives each list column as a Series of
-    per-row ndarray OBJECTS and pays an O(rows) Python-level
-    ``np.stack`` per batch per side; this form receives the raw
-    ``pa.ListArray`` and reshapes its contiguous values buffer into the
-    (rows × dim) matrix zero-copy (``_list_matrix``), so the per-batch
-    Python work is the dim loop alone. Paired order-alternating A/B on
-    the 2.56 M-pair knn candidate set: every adjacent pairing won,
-    minima 1.23×, means ≈1.4× (scripts/adjudicate_cosine_zerocopy.py).
+def cosine_sim(a: Column, b: Column) -> Column:
+    """:func:`cosine_sim_exprs` as a zero-copy Arrow-native UDF
+    (``arrow_udf``, Spark 4.1): it receives the raw ``pa.ListArray``
+    and reshapes its contiguous values buffer into the (rows × dim)
+    matrix without a per-row object (``_list_matrix``), so the
+    per-batch Python work is the dim loop alone.
 
-    Bit-exactness: the SAME per-dim left-to-right IEEE fold as
-    ``cosine_sim``/the Catalyst HOF form (pinned in
-    tests/test_similarity.py); float32→float64 widening exact; NaN →
-    NULL masking identical (``from_pandas=True`` maps NaN to null, the
-    Float64-mask twin). Degenerate rows (null row, null element,
-    ragged) drop to a per-row replay of the Catalyst sequence. Same
-    finite-input precondition and Project/Filter-only call-site
-    constraint as :func:`cosine_sim` (returned nondeterministic).
+    Bit-identical to the HOF form by construction: the dim loop
+    applies the SAME IEEE-754 double operation sequence the
+    ``aggregate`` fold does — per step one rounded multiply then one
+    rounded add, left to right — vectorized ACROSS rows instead of
+    along the vector, so no pairwise / BLAS re-association sneaks in.
+    float32 → float64 widening is exact; ``Math.sqrt`` and ``np.sqrt``
+    are both correctly rounded; denom and the final divide each round
+    once in both forms. A zero/NaN denom fails ``denom > 0`` in both
+    and is NULL here (``from_pandas=True`` maps NaN to null).
+    Degenerate rows (null row, null element, ragged) drop to a per-row
+    replay of the Catalyst sequence.
 
-    Routed to the corpus-scale pair scorers (knn graph, incremental
-    ANN) where candidate volume amortizes everything; the
-    threshold-gated banded/streaming consumers keep ``cosine_sim`` —
-    at their candidate counts the two forms are band-indistinguishable
-    and the pandas form has three rounds of adjudication history."""
+    PRECONDITION — finite inputs: ±inf elements give denom = inf > 0
+    with a NaN ratio, which the HOF form returns as NaN (sorted ABOVE
+    all doubles by a descending top-k) while this form returns NULL
+    (dropped by threshold filters). Callers feeding unsanitized
+    external vectors must filter non-finite rows first; the engine's
+    similarity operators all consume the generated corpus tables,
+    which are finite by construction.
+
+    CALL-SITE CONSTRAINT: returned as a nondeterministic expression,
+    so it is valid in Project/Filter positions only — Spark's analyzer
+    rejects nondeterministic expressions inside join conditions,
+    aggregate-function arguments and generator inputs, and it blocks
+    pushdown of unrelated filters below the projection. The mark is
+    what keeps the UDF single-eval: the threshold consumers filter on
+    the cosine column above the projection, and a pushed-down filter
+    referencing a UDF-computed column duplicates the ArrowEvalPython
+    below itself (guide §4.4; pinned in tests/test_udf_single_eval.py).
+    The function is deterministic, so blocking reorder/duplication
+    changes no result."""
 
     @F.arrow_udf("double")
-    def _cos0(av: pa.Array, bv: pa.Array) -> pa.Array:
+    def _cos(av: pa.Array, bv: pa.Array) -> pa.Array:
         A = _list_matrix(av)
         B = _list_matrix(bv)
         if A is None or B is None or A.shape[1] != B.shape[1]:
@@ -232,4 +187,4 @@ def cosine_sim_zerocopy(a: Column, b: Column) -> Column:
             c = np.where(denom > 0, d / denom, np.nan)
         return pa.array(c, type=pa.float64(), from_pandas=True)
 
-    return _cos0.asNondeterministic()(a, b)
+    return _cos.asNondeterministic()(a, b)

@@ -591,43 +591,6 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_ADMIT_DIRS = _registered_cache()
 
 
-def _verify_pool():
-    """One-thread overlap pool for the verify tiers' driver id collects
-    (guide §2.6: Spark happily runs jobs from several driver threads;
-    the tiers' actions are only sequential because the driver code
-    called them sequentially). The r15 body decomposition measured
-    ~43% of the per-batch wall as DRIVER-side expression construction
-    (minhash/HOF lambda trees, the pandas-UDF registration) serialized
-    between the two id-collect actions — so each collect now runs on
-    this pool while the main thread builds the next tier's expression
-    trees. One worker is enough: there is never more than one collect
-    in flight. ``FSBD_GATE_SERIAL=1`` restores the serial order (the
-    committed A/B adjudication seam — scripts/adjudicate_gate_overlap.py
-    toggles it inside one process)."""
-    import os
-    if os.environ.get("FSBD_GATE_SERIAL") == "1":
-        return None
-    from concurrent.futures import ThreadPoolExecutor
-    return ThreadPoolExecutor(max_workers=1)
-
-
-class _Done:
-    """Pre-resolved future for the serial (pool=None) path."""
-
-    def __init__(self, v):
-        self._v = v
-
-    def result(self):
-        return self._v
-
-
-def _submit(pool, fn, *args):
-    """Submit to the overlap pool, or run inline when serial."""
-    if pool is None:
-        return _Done(fn(*args))
-    return pool.submit(fn, *args)
-
-
 def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
                         batch: DataFrame, payload_path: str,
                         quant_payload_path: str | None = None,
@@ -648,58 +611,29 @@ def _cosine_verify_hits(spark: SparkSession, cand: DataFrame,
     is batch-scoped persisted (it feeds the tier-2 id fetch AND the
     exact join), so two-tier callers must pass ``scope`` and unpersist
     it after the sink write consumes the result."""
-    from ..engine.pointfetch import (fetch_ids, fetch_payload,
-                                     fetch_payload_prefetched)
-    from ..functions.vectors import cosine_sim
+    from ..engine.pointfetch import fetch_payload
+    from ..functions.vectors import cosine_sim_exprs
     from ..operators.similarity import NEARDUP_COS, quant_screen_keep
 
     q = batch.select("vec_id", F.col("embedding").alias("qv"))
     if quant_payload_path is not None:
         assert scope is not None, \
             "two-tier verify persists; caller must pass scope"
-        pool = _verify_pool()
-        try:
-            ids_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids1 = _submit(pool, fetch_ids, ids_df, "vec_id")
-            # §2.6 overlap: while the candidate-id collect materializes
-            # the bucket join on the pool thread, the driver builds the
-            # Cauchy-Schwarz screen's HOF expression trees
-            # (quant_screen_keep — id-independent, name-resolved at
-            # analysis; the Arrow-kernel variant was measured and
-            # rejected, see quant_screen_keep_arrow).
-            keep = quant_screen_keep(F.col("qv"), F.col("w32"),
-                                     F.col("s"))
-            qp = (fetch_payload_prefetched(spark, quant_payload_path,
-                                           "vec_id", ids_df, ids1.result())
-                  .select(F.col("vec_id").alias("old_id"), "w32", "s"))
-            cand = (cand.join(qp, "old_id").join(q, "vec_id")
-                    .where(keep)
-                    .select("old_id", "vec_id").persist())
-            scope.append(cand)
-            ids2_df = cand.select(F.col("old_id").alias("vec_id"))
-            ids2 = _submit(pool, fetch_ids, ids2_df, "vec_id")
-            # Overlap again: the screen's materialization + collect runs
-            # while the driver constructs (and registers) the exact
-            # Arrow cosine UDF for tier 2.
-            cos_pred = (cosine_sim(F.col("old_emb"), F.col("qv"))
-                        >= NEARDUP_COS)
-            corpus = (fetch_payload_prefetched(spark, payload_path,
-                                               "vec_id", ids2_df,
-                                               ids2.result())
-                      .select(F.col("vec_id").alias("old_id"),
-                              F.col("embedding").alias("old_emb")))
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=False)
-    else:
-        cos_pred = cosine_sim(F.col("old_emb"), F.col("qv")) >= NEARDUP_COS
-        corpus = (fetch_payload(spark, payload_path, "vec_id",
-                                cand.select(F.col("old_id")
-                                            .alias("vec_id")))
-                  .select(F.col("vec_id").alias("old_id"),
-                          F.col("embedding").alias("old_emb")))
+        qp = (fetch_payload(spark, quant_payload_path, "vec_id",
+                            cand.select(F.col("old_id").alias("vec_id")))
+              .select(F.col("vec_id").alias("old_id"), "w32", "s"))
+        cand = (cand.join(qp, "old_id").join(q, "vec_id")
+                .where(quant_screen_keep(F.col("qv"), F.col("w32"),
+                                         F.col("s")))
+                .select("old_id", "vec_id").persist())
+        scope.append(cand)
+    corpus = (fetch_payload(spark, payload_path, "vec_id",
+                            cand.select(F.col("old_id").alias("vec_id")))
+              .select(F.col("vec_id").alias("old_id"),
+                      F.col("embedding").alias("old_emb")))
     return (cand.join(corpus, "old_id").join(q, "vec_id")
-            .where(cos_pred)
+            .where(cosine_sim_exprs(F.col("old_emb"), F.col("qv"))
+                   >= NEARDUP_COS)
             .select("vec_id").distinct())
 
 
@@ -960,8 +894,7 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
     ``scope`` for the CALLER's finally-block to unpersist — the
     result is consumed lazily inside the caller's sink write, after
     this function returns."""
-    from ..engine.pointfetch import (fetch_ids, fetch_payload,
-                                     fetch_payload_prefetched)
+    from ..engine.pointfetch import fetch_payload
     from ..functions.text import token_ngrams, tokens
     from ..operators.dedup import (JACCARD_THRESHOLD, SHINGLE_N,
                                    hashed_shingle_cols)
@@ -975,54 +908,37 @@ def _jaccard_verify_hits(spark: SparkSession, cand: DataFrame,
         # for the life of the session (r12 ADVICE).
         assert scope is not None, \
             "two-tier verify persists; caller must pass scope"
-        pool = _verify_pool()
-        try:
-            ids_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids1 = _submit(pool, fetch_ids, ids_df, "doc_id")
-            # §2.6 overlap: the candidate-id collect (which materializes
-            # the signature chain + bucket join) runs on the pool thread
-            # while the driver builds the hash-screen expression trees —
-            # the id-independent part of tier 1's driver wall.
-            nh = (hashed_shingle_cols(sh_new)
-                  .select("doc_id", F.col("hs").alias("hn"),
-                          F.col("n").alias("nn"),
-                          F.col("collide").alias("coll_n")))
-            ih = F.size(F.array_intersect("ho", "hn"))
-            keep = (F.col("coll_o") | F.col("coll_n")
-                    | (F.col("ih") / (F.col("no") + F.col("nn")
-                                      - F.col("ih"))
-                       >= JACCARD_THRESHOLD))
-            hp = (fetch_payload_prefetched(spark, hash_payload_path,
-                                           "doc_id", ids_df, ids1.result())
+        nh = (hashed_shingle_cols(sh_new)
+              .select("doc_id", F.col("hs").alias("hn"),
+                      F.col("n").alias("nn"),
+                      F.col("collide").alias("coll_n")))
+        ih = F.size(F.array_intersect("ho", "hn"))
+        keep = (F.col("coll_o") | F.col("coll_n")
+                | (F.col("ih") / (F.col("no") + F.col("nn") - F.col("ih"))
+                   >= JACCARD_THRESHOLD))
+        hp = (fetch_payload(spark, hash_payload_path, "doc_id",
+                            cand.select(F.col("old_doc").alias("doc_id")))
+              .select(F.col("doc_id").alias("old_doc"),
+                      F.col("hs").alias("ho"), F.col("n").alias("no"),
+                      F.col("collide").alias("coll_o")))
+        cand = (cand.join(hp, "old_doc").join(nh, "doc_id")
+                .select("old_doc", "doc_id", ih.alias("ih"),
+                        "no", "nn", "coll_o", "coll_n")
+                .where(keep)
+                .select("old_doc", "doc_id")
+                .persist())
+        scope.append(cand)
+        # Tier 2 re-shingles with the index build's own kernel
+        # (_shingle_sets' two-projection shape: tokenize into a real
+        # column first so the regex split stays once-per-row under the
+        # transform() lambda).
+        sh_old = (fetch_payload(spark, text_payload_path, "doc_id",
+                                cand.select(F.col("old_doc")
+                                            .alias("doc_id")))
+                  .select("doc_id", tokens("text").alias("toks"))
                   .select(F.col("doc_id").alias("old_doc"),
-                          F.col("hs").alias("ho"), F.col("n").alias("no"),
-                          F.col("collide").alias("coll_o")))
-            cand = (cand.join(hp, "old_doc").join(nh, "doc_id")
-                    .select("old_doc", "doc_id", ih.alias("ih"),
-                            "no", "nn", "coll_o", "coll_n")
-                    .where(keep)
-                    .select("old_doc", "doc_id")
-                    .persist())
-            scope.append(cand)
-            ids2_df = cand.select(F.col("old_doc").alias("doc_id"))
-            ids2 = _submit(pool, fetch_ids, ids2_df, "doc_id")
-            # Overlap again: the screen materializes + collects on the
-            # pool thread while the driver constructs tier 2's
-            # re-shingle expression chain (the exact kernel the index
-            # build used — _shingle_sets' two-projection shape: tokenize
-            # into a real column first so the regex split stays
-            # once-per-row under the transform() lambda).
-            tok_col = tokens("text").alias("toks")
-            ng_col = F.array_distinct(
-                token_ngrams(F.col("toks"), SHINGLE_N)).alias("so")
-            sh_old = (fetch_payload_prefetched(spark, text_payload_path,
-                                               "doc_id", ids2_df,
-                                               ids2.result())
-                      .select("doc_id", tok_col)
-                      .select(F.col("doc_id").alias("old_doc"), ng_col))
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=False)
+                          F.array_distinct(token_ngrams(
+                              F.col("toks"), SHINGLE_N)).alias("so")))
     else:
         sh_old = (fetch_payload(spark, payload_path, "doc_id",
                                 cand.select(F.col("old_doc")

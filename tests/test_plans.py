@@ -9,6 +9,8 @@ degenerates to a cartesian product.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from full_stack_big_data_spark.operators.registry import load_all
@@ -591,6 +593,50 @@ def test_gate_verify_fetches_never_scan_the_corpus(spark):
         assert "embeddings.parquet" not in esplan, esplan[:2000]
         assert "PartitionFilters" in esplan and "pk" in esplan.split(
             "PartitionFilters")[1][:300], esplan[:2000]
+    finally:
+        for df in escope:
+            df.unpersist()
+
+
+def test_failed_gate_verify_leaves_no_running_job(spark, monkeypatch):
+    """A tier body that raises must leave no Spark job behind: the
+    two-tier verify runs its id collects inline, so by the time the
+    tier-2 kernel fails every job it started has finished. A detached
+    collect would outlive the failed micro-batch that Structured
+    Streaming replays."""
+    from full_stack_big_data_spark.functions import vectors
+    from full_stack_big_data_spark.operators.similarity import (
+        srp_payload_dir, srp_quant_payload_dir)
+    from full_stack_big_data_spark.streaming.joins import \
+        _cosine_verify_hits
+
+    emb_payload = srp_payload_dir(spark, SF)
+    eqpay = srp_quant_payload_dir(spark, SF)
+    ecand = spark.createDataFrame(
+        [(999001, 1), (999002, 2)], "vec_id long, old_id long")
+    batch = spark.createDataFrame(
+        [(999001, [0.1] * 64), (999002, [0.2] * 64)],
+        "vec_id long, embedding array<float>")
+
+    def boom(*_args):
+        raise RuntimeError("tier-2 kernel failed")
+
+    monkeypatch.setattr(vectors, "cosine_sim_exprs", boom)
+    tracker = spark.sparkContext.statusTracker()
+    # the status tracker reads listener events, which arrive async
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    escope = []
+    try:
+        with pytest.raises(RuntimeError, match="tier-2 kernel failed"):
+            _cosine_verify_hits(spark, ecand, batch, emb_payload,
+                                quant_payload_path=eqpay, scope=escope)
+        bus.waitUntilEmpty()
+        assert tracker.getActiveJobsIds() == []
+        assert escope, "tier-1 screen did not run"
+        jobs = set(tracker.getJobIdsForGroup())
+        time.sleep(1.0)     # a detached collect would start in here
+        bus.waitUntilEmpty()
+        assert set(tracker.getJobIdsForGroup()) <= jobs
     finally:
         for df in escope:
             df.unpersist()

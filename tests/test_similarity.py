@@ -573,10 +573,10 @@ def test_ivfpq_composition_laws(spark):
 
 
 def test_arrow_cosine_bit_identical_to_hof_form(spark):
-    """r14 change 10 pin: the Arrow-batched numpy cosine_sim must be
-    BIT-identical to the Catalyst zip_with+aggregate form it replaced —
-    same left-to-right IEEE double sequence, same NULL semantics
-    (null input, zero norm, ragged lengths). A dense cross of the smoke
+    """The Arrow-batched numpy ``cosine_sim`` must be BIT-identical to
+    the Catalyst zip_with+aggregate form (``cosine_sim_exprs``) — same
+    left-to-right IEEE double sequence, same NULL semantics (null
+    input, zero norm, ragged lengths). A dense cross of the smoke
     corpus catches re-association (BLAS/pairwise summation) drift; the
     degenerate rows catch NULL-path drift."""
     from pyspark.sql import functions as F
@@ -626,73 +626,24 @@ def test_srp_bucket_rows_single_udf_eval(spark):
     assert "size(" not in plan, "inferred size() filter reappeared"
 
 
-def test_arrow_quant_screen_bit_identical_to_hof_form(spark):
-    """r15 pin: the REFERENCE Arrow quantized-screen kernel
-    (quant_screen_keep_arrow — measured and rejected for the production
-    path, kept for the adjudication) must make the BIT-identical keep
-    decision the shipping Catalyst HOF bound chain makes — same
-    left-to-right IEEE double sequence, same scalar-multiply order,
-    same int16 unpack arithmetic. NULL/ragged rows may differ only as
-    NULL-vs-False (both dropped by the gate's filter). Dense corpus
-    pairs catch re-association drift; the degenerate rows catch the
-    unpack/NULL paths."""
-    from pyspark.sql import functions as F
-    from full_stack_big_data_spark.engine.catalog import Catalog
-    from full_stack_big_data_spark.operators.similarity import (
-        quant_screen_keep, quant_screen_keep_arrow, quantized_vec_cols)
-
-    e = Catalog(spark, SF_SMOKE).embeddings
-    qz = quantized_vec_cols(e.select("vec_id", "embedding")).where(
-        "vec_id % 5 = 0")
-    x = (e.select(F.col("vec_id").alias("ix"),
-                  F.col("embedding").alias("qv"))
-         .where("ix % 7 = 0"))
-    pairs = x.crossJoin(qz)
-    args = (F.col("qv"), F.col("w32"), F.col("s"))
-    bad = (pairs.select(quant_screen_keep_arrow(*args).alias("new"),
-                        quant_screen_keep(*args).alias("old"))
-           .where("new <> coalesce(old, false)").count())
-    assert bad == 0, f"{bad} pairs diverge from the Catalyst HOF screen"
-    # the sweep must exercise both outcomes or the comparison is vacuous
-    kept = pairs.where(quant_screen_keep_arrow(*args)).count()
-    assert 0 < kept < pairs.count()
-
-    degenerate = spark.createDataFrame(
-        [(1, [0.0] * 4, [0, 0], 0.0),             # zero query + zero codes
-         (2, [1.0, 2.0, 3.0, 4.0], [65537, 65537], 1e-4),   # codes (1,1,1,1)
-         (3, [1.0, 2.0, 3.0, 4.0], [-65536, 131071], 2.0),  # negative codes
-         (4, [1.0, 2.0, 3.0, 4.0], [65537], 1.0),  # ragged: codes too short
-         (5, None, [65537, 65537], 1.0),           # null query
-         (6, [1.0, -1.0], [virt := 0x7FFF7FFF, virt], 3.05e-5)],  # int16 max
-        "id int, qv array<float>, w32 array<int>, s float")
-    rows = degenerate.select(
-        "id", quant_screen_keep_arrow(F.col("qv"), F.col("w32"),
-                                      F.col("s")).alias("new"),
-        quant_screen_keep(F.col("qv"), F.col("w32"),
-                          F.col("s")).alias("old")).collect()
-    for r in rows:
-        old = bool(r.old) if r.old is not None else False
-        assert r.new == old, r
-
-
 def test_zerocopy_cosine_bit_identical_to_hof_form(spark):
-    """r15 pin: the arrow_udf zero-copy cosine (cosine_sim_zerocopy,
-    routed to the corpus-scale pair scorers) must be BIT-identical to
-    the Catalyst HOF form — same fold, same NaN→NULL masking — across
-    dense corpus pairs and every degenerate path (null row, null
-    element, ragged lengths, zero norm), exactly like the r14 pandas
-    kernel's pin above."""
+    """The arrow_udf zero-copy cosine (``cosine_sim``) must be
+    BIT-identical to the Catalyst HOF form (``cosine_sim_exprs``) —
+    same left-to-right IEEE double fold, same NaN→NULL masking. A
+    dense cross of the smoke corpus catches re-association
+    (BLAS/pairwise summation) drift; the degenerate rows (null row,
+    null element, ragged lengths, zero norm) catch NULL-path drift."""
     from pyspark.sql import functions as F
     from full_stack_big_data_spark.engine.catalog import Catalog
     from full_stack_big_data_spark.functions.vectors import (
-        cosine_sim_exprs, cosine_sim_zerocopy)
+        cosine_sim, cosine_sim_exprs)
 
     e = Catalog(spark, SF_SMOKE).embeddings
     a = e.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("x"))
     b = e.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("y"))
     pairs = a.where("ia % 5 = 0").crossJoin(b.where("ib % 7 = 0"))
     bad = (pairs.select(
-               cosine_sim_zerocopy(F.col("x"), F.col("y")).alias("new"),
+               cosine_sim(F.col("x"), F.col("y")).alias("new"),
                cosine_sim_exprs(F.col("x"), F.col("y")).alias("old"))
            .where("(new IS NULL) <> (old IS NULL) OR new <> old").count())
     assert bad == 0, f"{bad} pairs diverge from the Catalyst HOF form"
@@ -705,8 +656,40 @@ def test_zerocopy_cosine_bit_identical_to_hof_form(spark):
          (5, [1.0, -2.0, 3.0, -4.0], [4.0, 3.0, 2.0, 1.0])],
         "id int, x array<float>, y array<float>")
     rows = degenerate.select(
-        "id", cosine_sim_zerocopy(F.col("x"), F.col("y")).alias("new"),
+        "id", cosine_sim(F.col("x"), F.col("y")).alias("new"),
         cosine_sim_exprs(F.col("x"), F.col("y")).alias("old")).collect()
     for r in rows:
         assert (r.new is None) == (r.old is None) and \
             (r.new is None or r.new == r.old), r
+
+
+def test_list_matrix_scopes_the_null_check_to_the_slice():
+    """``ListArray.values`` is the whole child buffer, ignoring a
+    slice's offset: a null OUTSIDE the slice must not send the batch to
+    the per-row fallback (a per-batch cliff on sliced Arrow batches),
+    while a null inside it still must."""
+    import pyarrow as pa
+    from full_stack_big_data_spark.functions.vectors import _list_matrix
+
+    arr = pa.array([[1.0, None], [1.0, 2.0], [3.0, 4.0], [None, 5.0]],
+                   pa.list_(pa.float32()))
+    m = _list_matrix(arr.slice(1, 2))
+    assert m is not None and m.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    assert _list_matrix(arr.slice(0, 2)) is None
+
+
+def test_pq_codebook_roundtrips_through_a_file_uri(spark, tmp_path,
+                                                   monkeypatch):
+    """The driver-side codebook write resolves a ``file://`` root
+    through its filesystem: the Spark reader finds the codebook, and
+    no ``./file:`` directory appears in the working directory."""
+    from full_stack_big_data_spark.operators.similarity import (
+        _pq_codebooks, _read_pq_codebook, _write_pq_codebook)
+
+    monkeypatch.chdir(tmp_path)
+    cb = _pq_codebooks()
+    uri = (tmp_path / "gen" / "_codebook").as_uri()
+    _write_pq_codebook(spark, cb, uri)
+    _write_pq_codebook(spark, cb, uri)      # overwrite in place
+    assert (_read_pq_codebook(spark, uri) == cb).all()
+    assert not (tmp_path / "file:").exists()

@@ -43,10 +43,11 @@ _EXPECTED = {
     "emb_pq_train": {"_encode": 1},
     # one cell-assignment pass feeds the per-cell representative rank
     "emb_cell_representatives": {"_cells": 1},
-    # corpus assignment + query assignment branches + one cosine verify
-    "ann_ivf": {"_cells": 2, "_cos": 1},
+    # corpus assignment + query assignment branches; the cosine verify
+    # is the Catalyst HOF form (no Python eval)
+    "ann_ivf": {"_cells": 2},
     # driver-built probe set (r14 change 3): ONE corpus assignment
-    "ann_ivf_scaled": {"_cells": 1, "_cos": 1},
+    "ann_ivf_scaled": {"_cells": 1},
     # stored-codebook IVFADC: one assignment + one encode, zero copies
     "ann_ivfpq_adc": {"_cells": 1, "_encode": 1},
 }
